@@ -105,7 +105,6 @@ def pagerank(
     *,
     iterations: int = PR_ITERATIONS,
     damping: float = PR_DAMPING,
-    checkpoint_every: int | None = None,
     fold_buckets: int = PR_FOLD_BUCKETS,
     exact_hashes: bool = True,
 ) -> DataFrame:
@@ -118,12 +117,7 @@ def pagerank(
     SCALE.md round 10): the default pure-lineage form survives executor
     loss — every lost block recomputes, and the shared edge-derivation
     shuffle is a ReusedExchange across iterations so lineage costs no
-    extra wall-clock at shallow depth. ``checkpoint_every`` opts deep
-    loops (tens of iterations, where plan growth dominates) into
-    ``localCheckpoint`` rank truncation — faster planning but a lost
-    executor then FAILS the job loudly (localCheckpoint blocks are not
-    recomputable, by Spark contract); rerun or use a reliable checkpoint
-    dir when preemption is routine.
+    extra wall-clock at shallow depth.
 
     ``exact_hashes``: True (default) uses the two-level fixed-order fold —
     bit-identical results across engines/partitionings, priced at the
@@ -165,24 +159,14 @@ def pagerank(
         ).alias("bkt"),
     )
     # n_nodes rides the rank frame as a column (one row per node, +8
-    # bytes/row): re-deriving nodes + nstats INSIDE every iteration
-    # re-embedded ~4 copies of the whole edge-derivation subtree per
-    # round, growing the static plan to ~2.5k operators at 4 iterations —
-    # Catalyst + AQE planning over that tree was the dominant per-round
-    # cost (guide §3.3/§7.3: planning time on very large plans), and at
-    # tens of iterations it is the driver bottleneck at any scale. The
-    # update joins FROM the previous rank frame instead (same node set by
-    # construction — one row per node survives every round), so each
-    # round adds one join + the fold aggregates, not a fresh nodes tree;
-    # both join inputs already hash-cluster on the key (node / dst).
+    # bytes/row), and each round joins FROM the previous rank frame (same
+    # node set by construction) instead of re-deriving nodes + nstats.
     # Arithmetic is unchanged: (1-d)/n and 1/n stay the same single IEEE
     # divisions, so ranks remain bit-identical.
     ranks = nodes.crossJoin(F.broadcast(nstats)).select(
         "node", (F.lit(1.0) / F.col("n_nodes")).alias("rank"), "n_nodes"
     )
-    for it in range(iterations):
-        if checkpoint_every and it and it % checkpoint_every == 0:
-            ranks = ranks.localCheckpoint()
+    for _ in range(iterations):
         contribs = e.join(ranks, e["src"] == ranks["node"]).select(
             "dst", "src", "bkt", (F.col("rank") * F.col("share")).alias("contrib")
         )

@@ -35,8 +35,9 @@ from . import lifecycle  # noqa: E402,F401
 #     before the 7 exact-DECIMAL partial aggregates (queries/relational.py;
 #     DECIMAL sums are order-insensitive by construction).
 # Infra changes shared by every query this round (catalog.load_table
-# resolution memo) are covered by full 230-query drives recorded in
-# OPTIMIZATION_r12.md, per the round-11 precedent for session-wide confs.
+# resolution memo) are covered by full 230-query drives, per the round-11
+# precedent for session-wide confs; the memo itself is commit ba9caa8
+# ("Memoize base-table resolution").
 # The remaining slots drain NEXT_WINDOW_QUEUE in verdict-age order
 # (r7-aged block first) — after this window no verdict is older than r8,
 # the round-10 directive's target.

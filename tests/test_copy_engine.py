@@ -703,9 +703,9 @@ def test_versioned_catalog_on_hadoop_fs(spark, tmp_path):
     """The catalog's full publish protocol through the HadoopFS store
     interface (round-10 verdict item 5) — exercised against the Hadoop
     local filesystem (file:// URIs), the same code path as HDFS/S3A:
-    write -> atomic manifest publish -> read-back, incremental carry in
-    'auto' mode (no hard links on Hadoop stores -> degrades to copies)
-    and 'manifest' mode (zero carry I/O), ref-counted retention, drop."""
+    write -> atomic manifest publish -> read-back, incremental carry (no
+    hard links on Hadoop stores -> degrades to copies), keep-2 retention,
+    drop."""
     from datetime import datetime
 
     from mssql2monetdb_spark.engine.fs import HadoopFS
@@ -720,7 +720,7 @@ def test_versioned_catalog_on_hadoop_fs(spark, tmp_path):
     assert cat.current_version("default", "t") == p1
     assert cat.table_at(spark, "default", "t").count() == 2
 
-    # incremental carry, auto mode: HadoopFS.link raises -> copies
+    # incremental carry: HadoopFS.link raises -> copies
     df2 = spark.createDataFrame([(3, "c", 1)], "k bigint, s string, b int")
     p2 = cat.write_version_incremental(
         df2, "default", "t", datetime(2024, 6, 2), partition_col="b", base_physical=p1
@@ -729,33 +729,21 @@ def test_versioned_catalog_on_hadoop_fs(spark, tmp_path):
     got = {(r["k"], r["s"], r["b"]) for r in cat.table_at(spark, "default", "t").collect()}
     assert got == {(1, "a", 0), (3, "c", 1)}  # b=0 carried, b=1 rewritten
 
-    # manifest mode: untouched partitions carried by reference
+    # a second carry on top of a copy-carried base
     df3 = spark.createDataFrame([(4, "d", 1)], "k bigint, s string, b int")
     p3 = cat.write_version_incremental(
-        df3, "default", "t", datetime(2024, 6, 3),
-        partition_col="b", base_physical=p2, carry_mode="manifest",
+        df3, "default", "t", datetime(2024, 6, 3), partition_col="b", base_physical=p2
     )
     cat.publish(spark, "default", "t", p3)
     got = {(r["k"], r["s"], r["b"]) for r in cat.table_at(spark, "default", "t").collect()}
     assert got == {(1, "a", 0), (4, "d", 1)}
 
-    # retention: p1 is past keep-2 but hosts p3's referenced b=0 partition
-    # via p2's copy... (p3 refs p2, which physically owns both partitions
-    # after the copy carry) — p1 has no refs pinning it and is reaped
+    # retention: p1 is past keep-2 and reaped; the copies carried out of it
+    # keep the current version whole
     dropped = cat.cleanup("default", "t")
-    assert p1 in dropped
+    assert dropped == [p1]
     assert cat.table_versions("default", "t") == [p3, p2]
     assert {(r["k"],) for r in cat.table_at(spark, "default", "t").select("k").collect()} == {(1,), (4,)}
-
-    # link mode must raise on a store without hard links, by contract
-    df4 = spark.createDataFrame([(5, "e", 1)], "k bigint, s string, b int")
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="hard links"):
-        cat.write_version_incremental(
-            df4, "default", "t", datetime(2024, 6, 4),
-            partition_col="b", base_physical=p3, carry_mode="link",
-        )
 
     cat.drop_table(spark, "default", "t")
     assert not cat.exists("default", "t")
