@@ -836,11 +836,47 @@ def test_link_carry_survives_retention_reaping_the_base(spark, tmp_path):
     assert got == _latest_per_user(spark)
 
 
+def test_upsert_stream_partitioned_copy_carry_parity(spark, tmp_path, monkeypatch):
+    """The copy carry (taken on a store without hard links) must publish
+    the same content as the hard-link carry, row for row, and actually
+    copy: every data file in the published version is link-count 1."""
+    import os
+
+    def content(catalog):
+        return sorted(
+            tuple(r)
+            for r in catalog.table_at(spark, "main", "user_state_p").collect()
+        )
+
+    (tmp_path / "link").mkdir()
+    (tmp_path / "copy").mkdir()
+    linked = _drain_partitioned(spark, tmp_path / "link", buckets=8)
+
+    def no_link(src, dst, *a, **k):
+        raise OSError("EXDEV: cross-device link (simulated object store)")
+
+    monkeypatch.setattr(os, "link", no_link)
+    copied = _drain_partitioned(spark, tmp_path / "copy", buckets=8)
+    monkeypatch.undo()
+    assert content(copied) == content(linked)
+
+    # 3 shards -> >= 2 versions with carried (untouched) buckets
+    cur_dir = copied.version_dir(
+        "main", copied.current_version("main", "user_state_p")
+    )
+    nlinks = [
+        os.stat(os.path.join(root, f)).st_nlink
+        for root, _dirs, files in os.walk(cur_dir)
+        for f in files
+        if not f.startswith(("_", "."))
+    ]
+    assert nlinks and all(n == 1 for n in nlinks)
+
+
 def test_write_version_incremental_auto_falls_back_to_copy(spark, tmp_path, monkeypatch):
     """On a store without hard links (os.link raises) the carry degrades to
-    copies mid-carry: the published content is identical, and the carried
-    files really are copies — every data file is link-count 1, sharing no
-    inode with the base version."""
+    copies mid-carry and the published content is still the latest row
+    per user."""
     import os
 
     def no_link(src, dst, *a, **k):
@@ -853,18 +889,6 @@ def test_write_version_incremental_auto_falls_back_to_copy(spark, tmp_path, monk
         for r in catalog.table_at(spark, "main", "user_state_p").collect()
     }
     assert got == _latest_per_user(spark)
-
-    # 3 shards -> >= 2 versions with carried (untouched) buckets
-    cur_dir = catalog.version_dir(
-        "main", catalog.current_version("main", "user_state_p")
-    )
-    nlinks = [
-        os.stat(os.path.join(root, f)).st_nlink
-        for root, _dirs, files in os.walk(cur_dir)
-        for f in files
-        if not f.startswith(("_", "."))
-    ]
-    assert nlinks and all(n == 1 for n in nlinks)
 
 
 def test_compact_carries_buckets_meta_and_keeps_fast_path(spark, tmp_path):
