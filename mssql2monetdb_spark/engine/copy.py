@@ -260,32 +260,43 @@ class CopyEngine:
                 # fully replaces); kept as an explicit empty-write for
                 # non-versioned parity when fast view switching is off
                 pass
+            # the published version, read once: the incremental snapshot and
+            # the schema evolve below share this frame (one manifest read,
+            # one schema inference)
+            current = self.catalog.current_version(job.schema_name, job.to_table)
+            published_df = (
+                None
+                if current is None
+                else self.spark.read.parquet(self.catalog.version_dir(job.schema_name, current))
+            )
             # incremental append (trigger-filtered delta + published snapshot):
-            # only rows strictly newer than the persisted watermark are read
-            # from the source — the filter pushes down to the source scan —
-            # and the new version is snapshot+delta (the reference re-copies
-            # the full table every run; this is the Spark-first upgrade)
+            # only rows in (watermark, probe] are read from the source — the
+            # filter pushes down to the source scan — and the new version is
+            # snapshot+delta (the reference re-copies the full table every
+            # run; this is the Spark-first upgrade). The upper bound is the
+            # probe this run persists as its watermark: a row landing
+            # between the probe and the extract is left for the next tick,
+            # which reads everything above that watermark — without the
+            # bound it would be copied by both ticks.
             reads_current = False
             if job.incremental:
+                key = F.col(job.trigger_column)
+                probe = probes.get(job.job_id)
+                if probe is not None:
+                    # NULL keys pass: a full (first) load copies them as
+                    # before, and the delta's ``> state`` drops them anyway
+                    df = df.filter(key.isNull() | (key <= F.lit(probe.value)))
                 state = self.store.load(self.checksum, job.job_id)
-                cur = self.catalog.current_version(job.schema_name, job.to_table)
-                if state is not None and cur is not None:
-                    delta = df.filter(F.col(job.trigger_column) > F.lit(state.value))
-                    snapshot = self.spark.read.parquet(
-                        self.catalog.version_dir(job.schema_name, cur)
-                    )
-                    df = snapshot.unionByName(delta, allowMissingColumns=True)
+                if state is not None and published_df is not None:
+                    delta = df.filter(key > F.lit(state.value))
+                    df = published_df.unionByName(delta, allowMissingColumns=True)
                     reads_current = True
 
             # schema verify + evolve (op #14): widen the new version to the
             # union of the published schema and the incoming one so the view
             # never loses columns; incompatible retyping fails loudly
-            current = self.catalog.current_version(job.schema_name, job.to_table)
-            if current is not None:
-                published_schema = self.spark.read.parquet(
-                    self.catalog.version_dir(job.schema_name, current)
-                ).schema
-                df = evolve_to_union(df, published_schema)
+            if published_df is not None:
+                df = evolve_to_union(df, published_df.schema)
             if job.zorder_by:
                 df = self._zorder_cluster(df, job.zorder_by)
             target = job.to_table if job.use_fast_view_switching else f"tmp_{job.to_table}"

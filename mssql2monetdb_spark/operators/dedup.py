@@ -156,7 +156,9 @@ def minhash_lsh_pairs(
     Pipeline: shingle -> ONE fused per-doc aggregation (16 MIN signature
     columns + the distinct-shingle set via collect_set) -> band (4x4) ->
     bucket join -> distinct candidate pairs -> exact Jaccard -> threshold.
-    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, unordered: the
+    in-engine consumers (connected_components) need no order, so a caller
+    that wants sorted pairs adds its own ``orderBy``.
 
     The fused aggregation replaces the round-1 shape (distinct shuffle +
     two separate groupBys over a cached shingle relation): MIN is
@@ -195,7 +197,6 @@ def minhash_lsh_pairs(
             (inter.cast("double") / (F.col("sz_a") + F.col("sz_b") - inter)).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -318,9 +319,14 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
 
     Iterative min-label propagation (the DataFrame form of union-find):
     every node repeatedly adopts the smallest label among itself and its
-    neighbors until fixpoint. Converges in O(diameter) rounds — near-dup
-    components are tiny (dup clusters), so this is 2-4 rounds in practice;
-    each round is one join + one aggregate, all shuffle-keyed on doc id.
+    neighbors until fixpoint. Converges in O(diameter) rounds; each round
+    is one join + one aggregate, all shuffle-keyed on doc id. Near-dup
+    components are tiny: on the sf0.01 fixture every component is a pair
+    or a triangle, so the 1-hop initialization already holds the final
+    labels and the loop runs one confirming round. The symmetric edge
+    list is built in a single pass over ``pairs`` (one explode of both
+    directions, then distinct): a ``unionAll`` of two projections would
+    plan and run the whole upstream pair pipeline twice.
     ``max_iter`` is the runaway guard for adversarial chain-shaped graphs,
     and every ``CC_CHECKPOINT_EVERY`` rounds the label frame is
     ``localCheckpoint``-ed: without the truncation, each round's plan
@@ -329,8 +335,15 @@ def connected_components(pairs: DataFrame, *, max_iter: int = 20) -> DataFrame:
     geometrically even though the data stays small.
     """
     edges = caches.tracked(
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        pairs.select(
+            F.explode(
+                F.array(
+                    F.struct(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")),
+                    F.struct(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")),
+                )
+            ).alias("e")
+        )
+        .select("e.src", "e.dst")
         .distinct()
     )
     # initialize with the 1-hop minimum (label = min(id, min neighbor))

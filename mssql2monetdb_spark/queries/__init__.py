@@ -34,6 +34,12 @@ from . import lifecycle  # noqa: E402,F401
 #   - agg_tpch_q1: the unsplittable single-row-group scan is spread
 #     before the 7 exact-DECIMAL partial aggregates (queries/relational.py;
 #     DECIMAL sums are order-insensitive by construction).
+#   - dedup_connected_components, dedup_keep_best_in_cluster,
+#     pipeline_clean_corpus: connected_components builds its symmetric
+#     edge list in one explode over the pairs instead of a unionAll of
+#     two projections, and minhash_lsh_pairs no longer ends in an orderBy
+#     (dedup_minhash_lsh orders its own output, so its plan is unchanged)
+#     — operators/dedup.py; identical components by construction.
 # Infra changes shared by every query this round (catalog.load_table
 # resolution memo) are covered by full 230-query drives, per the round-11
 # precedent for session-wide confs; the memo itself is commit ba9caa8
@@ -46,6 +52,9 @@ from . import lifecycle  # noqa: E402,F401
 # checked by test_window_oracles_non_vacuous on every commit.
 GATE_PRIORITY = [
     # changed-code re-verifies (this round)
+    "dedup_connected_components",
+    "dedup_keep_best_in_cluster",
+    "pipeline_clean_corpus",
     "graph_pagerank",
     "agg_tpch_q1",
     # age-ladder canaries (NEXT_WINDOW_QUEUE order, pre-staged in r11)
@@ -94,9 +103,6 @@ GATE_PRIORITY = [
     "ann_lsh_topk",
     "text_stats",
     "text_quality_score",
-    "text_lang_id",
-    "text_fingerprint",
-    "multimodal_binary_meta",
 ]
 
 GATE_WINDOW = 50
@@ -118,6 +124,10 @@ GATE_WINDOW = 50
 # (computed from CORRECTNESS_r01-r11 — the remaining r8 block first,
 # then the oldest r8 rows), ties by registration order.
 NEXT_WINDOW_QUEUE = [
+    # canaries displaced by this round's changed-code slots
+    "text_lang_id",
+    "text_fingerprint",
+    "multimodal_binary_meta",
     "stream_tumbling_hourly",
     "stream_sliding_windows",
     "stream_session_windows",

@@ -140,7 +140,8 @@ def _minhash_oracle(shingle_n: int, threshold: float) -> str:
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(16) + LSH(4x4) near-dup pairs, exact-Jaccard verified >= 0.8."""
     t = Tables(spark, sf_dir)
-    return dedup.minhash_lsh_pairs(t.documents, shingle_n=3, threshold=0.8)
+    pairs = dedup.minhash_lsh_pairs(t.documents, shingle_n=3, threshold=0.8)
+    return pairs.orderBy("doc_a", "doc_b")
 
 
 def _simhash_oracle() -> str:

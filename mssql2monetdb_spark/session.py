@@ -49,6 +49,17 @@ _BUILD_CONF = {
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # 128 MiB input splits: good parquet scan granularity at scale.
     "spark.sql.files.maxPartitionBytes": str(128 * 1024 * 1024),
+    # PySpark's per-call call-site capture: with it on, every DataFrame/
+    # Column method records its Python call site in the JVM, about 4
+    # extra py4j round trips per call (one pass of the four benchmark
+    # query_mix queries over the sf0.01 fixture: 9,642 round trips with
+    # it, 4,822 without). Errors stay located: classic mode analyzes
+    # eagerly, so an AnalysisException still raises at the caller's own
+    # line; only the Python-origin lines in runtime-error query contexts
+    # go. PySpark reads this key once per process and caches it, so it
+    # only works at session build: it goes through get_spark(), not
+    # configure_runtime().
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
 }
 
 #: Conf keys that are safe to set on a live session (runtime-mutable).

@@ -178,6 +178,31 @@ def test_connected_components_adversarial_chain(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_connected_components_edges_read_pairs_once(spark, tmp_path, monkeypatch):
+    """The symmetric edge list comes from ONE pass over the pairs: its
+    optimized plan has no Union and scans the pairs source once, so an
+    upstream pair pipeline (MinHash band join, verify joins) is planned
+    and run once, not once per direction."""
+    from mssql2monetdb_spark.engine import caches
+    from mssql2monetdb_spark.operators.dedup import connected_components
+
+    path = str(tmp_path / "pairs.parquet")
+    spark.createDataFrame([(1, 2), (2, 3), (7, 9)], "doc_a long, doc_b long").write.parquet(path)
+    plans = []
+    track = caches.tracked
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return track(df)
+
+    monkeypatch.setattr(caches, "tracked", spy)
+    got = {r["doc_id"]: r["component_id"] for r in connected_components(spark.read.parquet(path)).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 7: 7, 9: 7}
+    edges_plan = plans[0]  # the first tracked frame is the edge list
+    assert "Union" not in edges_plan
+    assert edges_plan.count("Relation [") == 1, edges_plan
+
+
 def test_scrub_pii_redacts_and_counts(spark):
     from mssql2monetdb_spark.operators import corpus_prep
 
